@@ -1,6 +1,6 @@
-"""Runtime capability probes for optional codec libraries.
+"""Runtime capability probes for optional decoder libraries.
 
-The media/PDF kernels default to ``fake=None`` = "use the real decoder
+The PDF kernel defaults to ``fake=None`` = "use the real decoder
 if its library is importable, else the deterministic fake". This keeps
 the container honest (no hard-coded fake in an env that has codecs) and
 keeps every Spark-side shape testable in an env that doesn't.
@@ -21,10 +21,6 @@ def has_module(name: str) -> bool:
         return importlib.util.find_spec(name) is not None
     except (ImportError, ValueError):
         return False
-
-
-def has_pil() -> bool:
-    return has_module("PIL.Image")
 
 
 def has_pypdf() -> bool:

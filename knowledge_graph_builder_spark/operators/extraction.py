@@ -25,19 +25,15 @@ import warnings
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import textkit
 from ..rules import (
     FORCE_DETECT_PRODUCTS,
-    GPE_ABBREVIATIONS,
-    KNOWN_COMPANIES,
-    KNOWN_PRODUCTS,
     MAX_TEXT_LENGTH,
     METADATA_LABELS,
-    ORG_SUFFIXES,
     SPACY_TO_NORMALIZED,
     STRUCTURAL_TYPES,
 )
@@ -330,75 +326,6 @@ def events_from_kernel(kernel_rows: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def corrected_type_col(text: Column, label: Column) -> Column:
-    """P3 type correction (reference nlp_engine.py:55-101): the product
-    lexicon wins over the company lexicon; company correction only applies
-    to GPE-labelled spans."""
-    key = F.lower(F.trim(text))
-    return (
-        F.when(key.isin(KNOWN_PRODUCTS), F.lit("PRODUCT"))
-        .when((label == "GPE") & key.isin(KNOWN_COMPANIES), F.lit("ORG"))
-        .otherwise(label)
-    )
-
-
-def normalized_name_col(text: Column, ctype: Column) -> Column:
-    """P2 name normalization (reference nlp_engine.py:29-53): sequential
-    suffix strip for ORG/GPE (each suffix tested against the result of the
-    previous strip, case-sensitive endswith), then GPE abbreviation
-    expansion.
-
-    Implemented as a linear chain of end-anchored regexp_replace calls —
-    an unconditional replace IS the conditional strip, and unlike nested
-    `when(endswith)` expressions it keeps the Catalyst tree linear (each
-    step references its predecessor once, not three times)."""
-    import re as _re
-
-    name = F.trim(text)
-    for suffix in ORG_SUFFIXES:
-        name = F.trim(F.regexp_replace(name, _re.escape(suffix) + "$", ""))
-    abbrev_keys = list(GPE_ABBREVIATIONS)
-    expanded = F.when(
-        name.isin(abbrev_keys),
-        F.element_at(
-            F.create_map(*[F.lit(x) for kv in GPE_ABBREVIATIONS.items() for x in kv]), name
-        ),
-    ).otherwise(name)
-    # suffix strip applies to ORG/GPE; abbreviation expansion to GPE only
-    return (
-        F.when(ctype == "GPE", expanded)
-        .when(ctype == "ORG", name)
-        .otherwise(F.trim(text))
-    )
-
-
-def force_detect_hits(transcripts: DataFrame) -> DataFrame:
-    """P6 presence scan, computed from TURNS rather than assembled
-    documents: the force-detect products (reference nlp_engine.py:198)
-    contain no whitespace, and turns are joined with a space, so
-    `product in lower(document)` is exactly `any turn contains product`.
-    This keeps P6 a map-side-combinable aggregation — no document
-    assembly (at 10^12 turns the assembled-string groupBy would dominate
-    the whole entity stage).
-
-    Returns (conv_id, product, start_char) with start_char the in-turn
-    position of the first hit (first by turn_idx, then position) — a
-    surrogate for the reference's document-level find() offset, which
-    nothing downstream consumes semantically.
-    """
-    prods = F.explode(F.array(*[F.lit(p) for p in FORCE_DETECT_PRODUCTS])).alias("product")
-    per_turn = transcripts.select("conv_id", "turn_idx", F.lower(F.col("text")).alias("_lt")).select(
-        "conv_id", "turn_idx", "_lt", prods
-    )
-    hits = per_turn.withColumn("pos", F.instr(F.col("_lt"), F.col("product"))).filter(F.col("pos") > 0)
-    first_hit = hits.groupBy("conv_id", "product").agg(
-        F.min(F.struct("turn_idx", "pos")).alias("first")
-    )
-    return first_hit.select(
-        "conv_id", "product", (F.col("first.pos") - 1).cast("int").alias("start_char")
-    )
-
-
 def force_detect_hits_from_documents(documents: DataFrame) -> DataFrame:
     """P6 presence scan over assembled documents (exact reference offsets;
     used by the non-fused path and tests). Scans the CLEANED document —
@@ -425,8 +352,7 @@ def entity_stage(kernel_rows: DataFrame, force_hits: DataFrame) -> tuple[DataFra
     metadata: E3 — DATE/MONEY/PERCENT/CARDINAL/ORDINAL rows bucketed with
     their enclosing sentence (reference nlp_engine.py:103-134).
 
-    ``force_hits``: output of force_detect_hits(transcripts) or
-    force_detect_hits_from_documents(documents).
+    ``force_hits``: output of force_detect_hits_from_documents(documents).
     """
     mentions = kernel_rows.filter(F.col("kind") == "mention")
 

@@ -1,100 +1,13 @@
-"""Temporal join operators: as-of join and gap-based sessionization.
+"""Keyed snapshot diff: the change set between two versions of a table.
 
-The reference has no temporal machinery (SURVEY.md §2.9); these are the
-engine-side additions a transcript/event corpus needs (latest state as of
-a timestamp; session segmentation of event streams).
-
-``asof_join`` uses the union+window formulation rather than the naive
-inequality join: tag both inputs, union them on (key, ts), and carry the
-most recent right-side row forward with ``last(..., ignorenulls)`` over an
-ordered window. One shuffle, no row fan-out — the inequality-join
-formulation explodes to |orders| x |earlier events per key| intermediate
-rows, which at 100 TB is the difference between a sort and an OOM.
+``plans/incremental.py`` diffs two transcript snapshots with it and
+re-extracts only the conversations that were added, changed or removed.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    suffix: str = "_asof",
-) -> DataFrame:
-    """For each left row: the latest right row with the same key and
-    right_ts <= left_ts (inner semantics — left rows with no prior right
-    row are dropped, like DuckDB/kdb ASOF JOIN).
-
-    Ties on (key, ts): right rows sort before left rows at equal
-    timestamps, so an event AT the left timestamp is visible to it; among
-    equal-ts right rows the last by ``value_cols`` order wins
-    (deterministic via the sort below).
-    """
-    lcols = left.columns
-    r = right.select(
-        F.col(right_key).alias("_k"),
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-    )
-    l = left.select(
-        F.col(left_key).alias("_k"),
-        F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"{c}{suffix}") for c in value_cols],
-        *[F.col(c) for c in lcols],
-    )
-    unioned = r.unionByName(l)
-    w = (
-        Window.partitionBy("_k")
-        .orderBy("_ts", "_side", *[F.col(f"{c}{suffix}").asc_nulls_first() for c in value_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        "_side",
-        F.col("_ts").alias(f"{left_ts}{suffix}_left"),
-        *lcols,
-        *[F.last(f"{c}{suffix}", ignorenulls=True).over(w).alias(f"{c}{suffix}") for c in value_cols],
-        F.last(F.when(F.col("_side") == 0, F.col("_ts")), ignorenulls=True).over(w).alias(f"{right_ts}{suffix}"),
-    )
-    return (
-        carried.filter(F.col("_side") == 1)
-        .filter(F.col(f"{right_ts}{suffix}").isNotNull())
-        .drop("_side", f"{left_ts}{suffix}_left")
-    )
-
-
-def sessionize(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_seconds: int = 1800,
-    tie_break_cols: list[str] | None = None,
-) -> DataFrame:
-    """Assign gap-based session ids: a new session starts when the time
-    since the key's previous event exceeds ``gap_seconds``. Adds
-    ``session_id`` (0-based per key, by time order). One shuffle.
-
-    ``tie_break_cols`` extend the window ORDER BY past the timestamp so
-    equal-ts rows order deterministically — required when the output is
-    compared row-for-row across engines (the driver's value-hash)."""
-    w = Window.partitionBy(key_col).orderBy(ts_col, *(tie_break_cols or []))
-    secs = F.unix_timestamp(F.col(ts_col))  # floor-seconds; ANSI-safe
-    gap = secs - F.lag(secs).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    return events.withColumn(
-        "session_id",
-        F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1,
-    )
 
 
 def snapshot_diff(

@@ -52,11 +52,6 @@ from ..rules import (
     VERB_TO_RELATIONSHIP,
 )
 
-_CANDIDATE_COLS = [
-    "conv_id", "sent_idx", "source", "target", "type", "reason",
-    "confidence", "verb", "strat_group", "rule_pri", "ord_a", "ord_b", "attach_metadata",
-]
-
 # (flag column name, phrases) — a flag is true when any phrase occurs in
 # the lowered sentence. Phrase sets lifted from relationship_logic.py
 # R2:329-355, R3:360-389, R4:393-408, R5:410-426.
@@ -386,13 +381,3 @@ def attach_sentence_and_metadata(
         F.when(F.col("attach_metadata"), F.col("date")).alias("date"),
         F.when(F.col("attach_metadata"), F.col("amount")).alias("amount"),
     )
-
-
-def extract_relationships(kernel_rows: DataFrame, sentence_metadata: DataFrame) -> DataFrame:
-    """Full Strategy-1 + SVO pipeline through D1 and R9 (validation is a
-    separate operator — operators/validation.py). The fast path in
-    plans/pipeline.py validates BEFORE attaching sentences/metadata so the
-    string joins touch only surviving rows; output is identical because
-    validation neither reads nor filters on sentence/date/amount."""
-    deduped = dedup_relationships(candidate_relationships(kernel_rows))
-    return attach_sentence_and_metadata(deduped, kernel_rows, sentence_metadata)

@@ -28,7 +28,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.joins import snapshot_diff
 from .pipeline import run_pipeline

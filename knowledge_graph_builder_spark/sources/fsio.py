@@ -20,10 +20,9 @@ Atomicity, stated honestly:
 * On S3-style object stores rename is copy+delete, so the single-file
   pointer swap degrades to last-writer-wins with a small window. A real
   object-store deployment should put the manifest PTR behind a
-  conditional-PUT catalog — which is exactly what the Iceberg path
-  (``iceberg_store.IcebergGraphStore``) provides; this shim makes the
-  parquet-backed store RUN there, with that caveat documented instead
-  of silently crashing on ``os.rename``.
+  conditional-PUT catalog, as an Iceberg catalog provides; this shim
+  makes the parquet-backed store RUN there, with that caveat documented
+  instead of silently crashing on ``os.rename``.
 
 The Hadoop backend is exercised by tests against ``file:`` URIs (the
 RawLocalFileSystem), proving the py4j plumbing without needing a real

@@ -45,10 +45,8 @@ Two commit protocols, selected by ``commit_mode``:
 
 With an Iceberg catalog the same frames go through ``MERGE INTO`` and
 ``DELETE FROM`` and both protocols disappear; the key/dedup logic is
-identical, which is why it lives here and not in the sink. That path is
-implemented in ``iceberg_store.IcebergGraphStore`` (capability-gated on
-the runtime jar; tests/test_iceberg_store.py pins its MERGE state
-against this store when a jar is present).
+identical, which is why it lives here and not in the sink (SCALE.md
+keeps the design note for that path).
 """
 
 from __future__ import annotations

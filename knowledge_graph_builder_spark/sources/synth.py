@@ -173,22 +173,6 @@ def golden_transcripts(spark: SparkSession, shuffled: bool = True) -> DataFrame:
     return spark.createDataFrame(rows, schema=TRANSCRIPTS)
 
 
-def synth_documents(spark: SparkSession) -> DataFrame:
-    """Deterministic (doc_id, text) corpus for pinned dedup oracles:
-    one document per golden conversation (joined turns), plus a near-dup
-    variant (one word substituted) for every even-indexed document and an
-    exact duplicate of doc 0. Repo-internal — immune to testdata
-    regeneration, so literal-VALUES oracles over it stay valid."""
-    base = ["\n".join(turns) for _, turns in sorted(GOLDEN_TEXTS.items())]
-    rows: list[tuple[int, str]] = [(i, t) for i, t in enumerate(base)]
-    n = len(base)
-    for i, t in enumerate(base):
-        if i % 2 == 0:
-            rows.append((n + i, t.replace("the", "that", 1)))
-    rows.append((2 * n, base[0]))
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
 # Hand-derived complete (document, subj, pred, obj) triple set the
 # reference's rule semantics emit over GOLDEN_TEXTS — the P/R ground
 # truth (BASELINE.json metric). Single source of truth: the P/R test

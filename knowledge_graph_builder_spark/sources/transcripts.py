@@ -50,13 +50,6 @@ def read_transcripts(spark: SparkSession, source: str, fmt: str | None = None) -
     return reader.parquet(source)
 
 
-def write_transcripts(df: DataFrame, path: str, buckets: int = 0) -> None:
-    """Write transcripts partition-friendly: clustered by conv_id so the
-    assembly shuffle is cheap (and prunable when bucketing is available)."""
-    writer = df.repartition("conv_id").sortWithinPartitions("conv_id", "turn_idx").write.mode("overwrite")
-    writer.parquet(path)
-
-
 def write_transcripts_bucketed(df: DataFrame, table: str, buckets: int = 64) -> None:
     """Land the transcripts table HASH-BUCKETED by conv_id (Spark SQL
     bucketing via saveAsTable; the Iceberg equivalent is

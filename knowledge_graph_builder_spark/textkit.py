@@ -71,10 +71,7 @@ def clean_text(text: str) -> str:
 # These run inside the kernel, once per mention, so the JVM side never
 # re-evaluates the lexicon `when` chains or the 8-step suffix-strip regex
 # chain (which Catalyst would otherwise duplicate into every window key
-# and projection that references the column). The equivalent relational
-# operators (operators/extraction.corrected_type_col / normalized_name_col)
-# remain the public §2 operator surface and are pinned by tests to agree
-# with these.
+# and projection that references the column).
 # ---------------------------------------------------------------------------
 
 _KNOWN_PRODUCTS = frozenset(KNOWN_PRODUCTS)

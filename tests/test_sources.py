@@ -65,78 +65,6 @@ def test_streaming_restart_is_idempotent(spark, tmp_path):
     assert streamed == _triple_set(spark, tr)
 
 
-def test_compact_parquet_preserves_rows_and_untouched_partitions(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from knowledge_graph_builder_spark.operators.compact import (
-        _data_files,
-        compact_parquet,
-    )
-
-    root = str(tmp_path / "tbl")
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 3).alias("part"), F.md5(F.col("id").cast("string")).alias("v")
-    )
-    # fragment partitions 0/1 into many tiny files; partition 2 single-file
-    df.filter("part < 2").repartition(16).write.partitionBy("part").parquet(root)
-    df.filter("part = 2").coalesce(1).write.mode("append").partitionBy("part").parquet(root)
-
-    p2 = os.path.join(root, "part=2")
-    sig_before = sorted(
-        (os.path.basename(f), os.path.getsize(f)) for f in _data_files(p2)
-    )
-    before_rows = sorted(tuple(r) for r in spark.read.parquet(root).collect())
-
-    rep = compact_parquet(spark, root, target_file_bytes=64 * 1024 * 1024)
-    assert rep.partitions_seen == 3
-    assert rep.partitions_compacted == 2          # part=2 already compact
-    assert rep.files_after < rep.files_before
-    assert len(_data_files(os.path.join(root, "part=0"))) == 1
-
-    # untouched partition files byte-identical (same names, same sizes)
-    sig_after = sorted(
-        (os.path.basename(f), os.path.getsize(f)) for f in _data_files(p2)
-    )
-    assert sig_after == sig_before
-    # value-identical table after compaction
-    after_rows = sorted(tuple(r) for r in spark.read.parquet(root).collect())
-    assert after_rows == before_rows
-    # idempotent: second sweep is a no-op
-    rep2 = compact_parquet(spark, root, target_file_bytes=64 * 1024 * 1024)
-    assert rep2.partitions_compacted == 0
-
-
-def test_bucketed_join_eliminates_exchange(spark, tmp_path):
-    from knowledge_graph_builder_spark.sources.bucketed import (
-        join_plan_exchanges,
-        write_bucketed,
-    )
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '{tmp_path}/wh'")
-    try:
-        nodes = spark.range(1000).selectExpr("id AS key", "md5(id::string) AS name")
-        edges = spark.range(5000).selectExpr(
-            "(id % 1000) AS key", "id AS edge_id"
-        )
-        write_bucketed(nodes, "bucketdb.b_nodes", "key", n_buckets=8)
-        write_bucketed(edges, "bucketdb.b_edges", "key", n_buckets=8)
-        # co-located: the equi-join on the bucket key plans ZERO shuffles
-        assert join_plan_exchanges(spark, "bucketdb.b_nodes", "bucketdb.b_edges", "key") == 0
-        # values are right too
-        out = spark.table("bucketdb.b_nodes").join(spark.table("bucketdb.b_edges"), "key")
-        assert out.count() == 5000
-        # control: the same join from raw (unbucketed) frames shuffles
-        nodes.createOrReplaceTempView("raw_nodes")
-        edges.createOrReplaceTempView("raw_edges")
-        raw = spark.table("raw_nodes").join(spark.table("raw_edges"), "key")
-        raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in raw_plan
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
-
-
 def test_bucketed_transcripts_run_kernel_shuffle_free(spark, tmp_path):
     """SCALE.md §1 input layout, now executable: transcripts landed via
     write_transcripts_bucketed read back as one-partition-per-bucket with
