@@ -16,7 +16,7 @@ import hashlib
 import numpy as np
 import pytest
 
-from knowledge_graph_builder_spark.operators.packing import (
+from corpus_ops.packing import (
     _cdc_cut_points,
     cdc_chunks_fast,
     cdc_chunks_fast_local,

@@ -85,6 +85,37 @@ def test_null_conv_id_and_turn_idx_contract(spark, tmp_path):
         assert got == expected, f"fused={fused}: {got}"
 
 
+def test_lsh_degenerate_bucket_filtered_before_materialization(spark):
+    """500 identical docs put every signature in one bucket: the count-first
+    guard must drop it (no unbounded member-list aggregation) and the run
+    must complete; distinct small groups still pair up."""
+    from pyspark.sql import functions as F
+
+    from corpus_ops.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        word_shingles,
+    )
+
+    boiler = spark.range(500).selectExpr(
+        "id AS doc_id",
+        "'the same boilerplate text repeated across every single document here' AS text",
+    )
+    # two genuinely-similar docs that must still surface as a pair
+    pair = spark.createDataFrame(
+        [(1000, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+         (1001, "alpha beta gamma delta epsilon zeta eta theta iota lambda")],
+        "doc_id long, text string",
+    )
+    docs = boiler.unionByName(pair)
+    sigs = minhash_signatures(word_shingles(docs, "doc_id", "text", k=3), n_hashes=16)
+    pairs = lsh_candidate_pairs(sigs, n_bands=4, max_bucket=200).collect()
+    ids = {(r.a, r.b) for r in pairs}
+    assert (1000, 1001) in ids  # the bounded bucket still yields its pair
+    # the 500-doc bucket was dropped wholesale: no boilerplate pairs at all
+    assert all(a >= 1000 for a, _ in ids)
+
+
 def test_precap_byte_parity_and_reduction(spark):
     # a hot conversation whose turns exceed the document cap: precap must
     # (a) drop provably-non-contributing turns before the shuffle and
