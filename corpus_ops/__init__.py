@@ -1,6 +1,5 @@
 """Corpus-curation operators on Spark DataFrames: dedup, similarity,
-text statistics, sampling, packing and chunking, BPE, sketches, graph
-analytics.
+text statistics, sampling, packing and chunking, BPE.
 
 These are general data-preparation operators, not part of the knowledge
 graph engine: nothing in ``knowledge_graph_builder_spark`` imports them.

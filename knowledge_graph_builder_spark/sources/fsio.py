@@ -1,6 +1,6 @@
 """Filesystem shim for store/lineage METADATA I/O (round-4 verdict ask
 #4). Bulk data goes through Spark's readers/writers, which already speak
-any Hadoop-compatible filesystem; but GraphStore manifests/counters, the
+any Hadoop-compatible filesystem; but GraphStore manifests, the
 BatchLedger markers, streaming partial-store listings and the pipeline
 lineage manifest previously used raw ``os.*``/``open`` — meaning none of
 it could run where 100 TB actually lives (s3a://, gs://, hdfs://). This
@@ -14,15 +14,22 @@ ABFS) the cluster's Spark jobs already use, no extra Python deps.
 
 Atomicity, stated honestly:
 
-* POSIX ``replace``/``rename`` are atomic.
-* The Hadoop backend's ``write_text_atomic`` stages a temp file and
-  renames with ``FileContext.rename(OVERWRITE)`` — atomic on HDFS.
-* On S3-style object stores rename is copy+delete, so the single-file
-  pointer swap degrades to last-writer-wins with a small window. A real
-  object-store deployment should put the manifest PTR behind a
-  conditional-PUT catalog, as an Iceberg catalog provides; this shim
-  makes the parquet-backed store RUN there, with that caveat documented
-  instead of silently crashing on ``os.rename``.
+* POSIX ``write_text_atomic`` (temp file + ``os.replace``) is an atomic
+  replace; ``write_text_exclusive`` (temp file + ``os.link``) is an
+  atomic create that fails with ``FileExistsError`` if the name exists.
+  Either way the name appears only with its full content.
+* The Hadoop backend stages a temp file and renames it with
+  ``FileContext.rename`` — ``OVERWRITE`` for the replace, ``NONE`` for
+  the exclusive create. Both are atomic on HDFS, so HDFS gives the
+  exclusive create GraphStore commits rely on. (On the local filesystem
+  behind a ``file:`` URI, Hadoop's rename-without-overwrite is a
+  check-then-rename: fine for tests, not for concurrent writers.)
+* On S3-style object stores rename is copy+delete, so neither rename is
+  atomic and two concurrent writers can both "win" a create. A real
+  object-store deployment with concurrent writers should claim manifest
+  versions through a conditional-PUT catalog, as an Iceberg catalog
+  provides; this shim makes the parquet-backed store RUN there, with
+  that caveat documented instead of silently crashing on ``os.rename``.
 
 The Hadoop backend is exercised by tests against ``file:`` URIs (the
 RawLocalFileSystem), proving the py4j plumbing without needing a real
@@ -69,12 +76,22 @@ class PosixFileIO:
             fh.write(text)
         os.replace(tmp, p)
 
+    def write_text_exclusive(self, path: str, text: str) -> None:
+        """Create ``path`` holding ``text``; ``FileExistsError`` if it
+        exists. ``link`` of a fully written temp file is atomic and never
+        replaces, so the name appears complete or not at all."""
+        p = self._local(path)
+        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        try:
+            os.link(tmp, p)
+        finally:
+            os.unlink(tmp)
+
     def append_text(self, path: str, text: str) -> None:
         with open(self._local(path), "a") as fh:
             fh.write(text)
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(self._local(src), self._local(dst))
 
     def rmtree(self, path: str) -> None:
         p = self._local(path)
@@ -134,7 +151,23 @@ class HadoopFileIO:
     def write_text_atomic(self, path: str, text: str) -> None:
         tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         self._write(tmp, text)
-        self._rename_overwrite(tmp, path)
+        self._rename(tmp, path, "OVERWRITE")
+
+    def write_text_exclusive(self, path: str, text: str) -> None:
+        """Temp file + ``FileContext.rename(NONE)``; Hadoop's
+        ``FileAlreadyExistsException`` surfaces as ``FileExistsError``."""
+        from py4j.protocol import Py4JJavaError
+
+        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+        self._write(tmp, text)
+        try:
+            self._rename(tmp, path, "NONE")
+        except Py4JJavaError as exc:
+            self.rmtree(tmp)
+            name = exc.java_exception.getClass().getName()
+            if name == "org.apache.hadoop.fs.FileAlreadyExistsException":
+                raise FileExistsError(path) from None
+            raise
 
     def append_text(self, path: str, text: str) -> None:
         """Append for small metadata files. Hadoop append() is unsupported
@@ -145,20 +178,15 @@ class HadoopFileIO:
         prev = self.read_text(path) if self.exists(path) else ""
         self.write_text_atomic(path, prev + text)
 
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs(src).rename(self._p(src), self._p(dst)):
-            raise OSError(f"hadoop rename failed: {src} -> {dst}")
-
-    def _rename_overwrite(self, src: str, dst: str) -> None:
-        """FileContext.rename(OVERWRITE): atomic replace on HDFS (and the
-        local fs); copy+delete (non-atomic) on object stores — see module
-        docstring."""
+    def _rename(self, src: str, dst: str, option: str) -> None:
+        """``FileContext.rename`` with one ``Options.Rename`` value: atomic
+        on HDFS, copy+delete on object stores (see module docstring)."""
         fc = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
             self._p(dst).toUri(), self._conf
         )
         rename_cls = self._jvm.org.apache.hadoop.fs.Options.Rename
         opts = self._gw.new_array(rename_cls, 1)
-        opts[0] = rename_cls.OVERWRITE
+        opts[0] = getattr(rename_cls, option)
         fc.rename(self._p(src), self._p(dst), opts)
 
     def rmtree(self, path: str) -> None:

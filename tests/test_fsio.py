@@ -27,7 +27,8 @@ def test_io_for_selects_backend(spark):
 @pytest.mark.parametrize("backend", ["posix", "hadoop"])
 def test_backends_roundtrip(spark, tmp_path, backend):
     """Same contract on both backends: mkdirs/exists/write-atomic/read/
-    list/rename/rmtree, plus atomic overwrite of an existing file."""
+    list/exclusive-create/rmtree, plus atomic overwrite of an existing
+    file."""
     io = PosixFileIO() if backend == "posix" else HadoopFileIO(spark)
     root = (str(tmp_path) if backend == "posix" else f"file:{tmp_path}") + "/store"
     assert not io.exists(root)
@@ -47,28 +48,33 @@ def test_backends_roundtrip(spark, tmp_path, backend):
     io.append_text(p, "\nx")
     assert io.read_text(p).endswith("\nx")
 
+    # exclusive create (the manifest-version claim): the first create
+    # wins; a second to the same path fails and keeps the first content
+    v = f"{root}/v0.json"
+    io.write_text_exclusive(v, "first")
+    with pytest.raises(FileExistsError):
+        io.write_text_exclusive(v, "second")
+    assert io.read_text(v) == "first"
+    assert [e for e in io.listdir(root) if "tmp-" in e] == []
+
     io.makedirs(f"{root}/commit-1/_bucket=3")
     assert "commit-1" in io.listdir(root)
-    io.rename(f"{root}/commit-1", f"{root}/commit-2")
-    assert io.isdir(f"{root}/commit-2/_bucket=3")
-    assert "commit-1" not in io.listdir(root)
-
-    io.rmtree(f"{root}/commit-2")
-    assert not io.exists(f"{root}/commit-2")
+    io.rmtree(f"{root}/commit-1")
+    assert not io.exists(f"{root}/commit-1")
     # rmtree of a missing path is a no-op, not an error
     io.rmtree(f"{root}/never-existed")
 
 
 def test_manifest_graphstore_through_hadoop_backend(spark, tmp_path):
-    """The full manifest-mode MERGE protocol running with every metadata
+    """The full manifest MERGE protocol running with every metadata
     operation routed through the Hadoop FileSystem (file: URI): upsert,
-    last-writer-wins re-upsert, manifest swap, vacuum of superseded
+    last-writer-wins re-upsert, manifest version claim, vacuum of superseded
     commit dirs."""
     from knowledge_graph_builder_spark.sources.graph_store import GraphStore
 
     root = f"file:{tmp_path}/graph"
     io = HadoopFileIO(spark)
-    store = GraphStore(spark, root, n_buckets=4, commit_mode="manifest", io=io)
+    store = GraphStore(spark, root, n_buckets=4, io=io)
 
     nodes1 = spark.createDataFrame(
         [("Acme", "ORG", "s1"), ("Ada", "PERSON", "s1")],
@@ -92,15 +98,15 @@ def test_manifest_graphstore_through_hadoop_backend(spark, tmp_path):
         ("Bob", "PERSON"): "s1",
     }
     # the manifest file itself lives behind the shim
-    assert io.exists(f"{root}/nodes.manifest.json")
-    manifest = json.loads(io.read_text(f"{root}/nodes.manifest.json"))
+    assert io.exists(f"{root}/nodes._manifests/v1.json")
+    manifest = json.loads(io.read_text(f"{root}/nodes._manifests/v1.json"))
     assert manifest["seq"] == 1
     # vacuum removes nothing live, then removes a superseded commit
     removed = store.vacuum("nodes")
     live = set(manifest["buckets"].values())
     assert set(removed).isdisjoint(live)
     # reopen from a fresh store object: state persists via the manifest
-    store2 = GraphStore(spark, root, n_buckets=4, commit_mode="manifest", io=io)
+    store2 = GraphStore(spark, root, n_buckets=4, io=io)
     assert store2.nodes().count() == 3
     store2.clear_session("s1")
     assert {r.name for r in store2.nodes().collect()} == {"Acme"}

@@ -1,24 +1,26 @@
-"""Manifest-pointer commit protocol for GraphStore (commit_mode="manifest").
+"""Versioned-manifest commit protocol for GraphStore.
 
-The object-store-safe alternative to the POSIX bucket-directory swap:
-immutable commit directories + one atomically replaced manifest file
-(the Iceberg metadata-pointer pattern). These tests pin the contract:
+Immutable commit directories plus one exclusively created manifest
+version per commit (the Iceberg metadata-pointer pattern). These tests
+pin the contract:
 
-* parity with rename mode (same upserts -> same MERGE state);
 * data-file immutability (an upsert never rewrites or renames a
-  referenced file — only the manifest pointer moves);
-* crash safety (an orphan commit dir without a manifest swap is
+  referenced file — only a new manifest version appears);
+* crash safety (an orphan commit dir without a manifest version is
   invisible to readers and reclaimed by vacuum);
-* history/as-of, clear_session, and legacy-layout migration all work
-  under the manifest protocol.
+* concurrent writers (two commits racing for one version: one wins, the
+  other raises and lands on retry, no batch is lost);
+* clear_session and unseen-bucket upserts under the same protocol.
 """
 
 import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from knowledge_graph_builder_spark.sources.fsio import PosixFileIO
 from knowledge_graph_builder_spark.sources.graph_store import GraphStore
 
 
@@ -33,29 +35,11 @@ def _state(store):
     }
 
 
-def test_manifest_mode_matches_rename_mode(spark, tmp_path):
-    batches = [
-        [("Apple", "ORG", "s1"), ("Jobs", "PERSON", "s1")],
-        [("Apple", "ORG", "s2"), ("MSFT", "ORG", "s2")],  # update + insert
-        [("Jobs", "PERSON", "s3")],
-    ]
-    a = GraphStore(spark, str(tmp_path / "rename"), n_buckets=8)
-    b = GraphStore(spark, str(tmp_path / "manifest"), n_buckets=8, commit_mode="manifest")
-    for batch in batches:
-        a.upsert_nodes(_nodes_df(spark, batch))
-        b.upsert_nodes(_nodes_df(spark, batch))
-    assert _state(a) == _state(b) == {
-        ("Apple", "ORG"): "s2",
-        ("Jobs", "PERSON"): "s3",
-        ("MSFT", "ORG"): "s2",
-    }
-
-
 def test_manifest_upsert_never_touches_referenced_files(spark, tmp_path):
     """Immutability: files referenced by the pre-upsert manifest are
     byte-identical afterwards; the commit only swaps the pointer."""
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=8, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=8)
     store.upsert_nodes(
         _nodes_df(spark, [(f"n{i}", "ORG", "s1") for i in range(64)])
     )
@@ -81,7 +65,7 @@ def test_manifest_upsert_never_touches_referenced_files(spark, tmp_path):
 
 def test_manifest_crash_orphan_is_invisible_and_vacuumable(spark, tmp_path):
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=4, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=4)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
     good = _state(store)
 
@@ -102,7 +86,7 @@ def test_manifest_crash_orphan_is_invisible_and_vacuumable(spark, tmp_path):
 
 def test_manifest_vacuum_reclaims_superseded_commits(spark, tmp_path):
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=2, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=2)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
     # same key again: its bucket's pointer moves to the new commit, fully
     # superseding the first commit directory
@@ -115,7 +99,7 @@ def test_manifest_vacuum_reclaims_superseded_commits(spark, tmp_path):
 
 
 def test_manifest_clear_session(spark, tmp_path):
-    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4, commit_mode="manifest")
+    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1"), ("MSFT", "ORG", "s2")]))
     store.clear_session("s1")
     assert _state(store) == {("MSFT", "ORG"): "s2"}
@@ -125,30 +109,15 @@ def test_manifest_clear_session(spark, tmp_path):
     assert store.nodes().count() == 0
 
 
-def test_manifest_history_mode_as_of(spark, tmp_path):
-    store = GraphStore(
-        spark, str(tmp_path / "g"), n_buckets=4, keep_history=True, commit_mode="manifest"
-    )
-    store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
-    seq1 = store.current_seq("nodes")
-    store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s2")]))
-    assert _state(store) == {("Apple", "ORG"): "s2"}
-    asof = {
-        (r["name"], r["type"]): r["session_id"]
-        for r in store.nodes_as_of(seq1).select("name", "type", "session_id").collect()
-    }
-    assert asof == {("Apple", "ORG"): "s1"}
-
-
 def test_manifest_upsert_into_unseen_bucket(spark, tmp_path):
     """Regression (round-4 advice): an upsert whose batch touches ONLY
     buckets the manifest has never seen used to crash — the empty-leaf
     read path returned a frame without _bucket and the unionByName with
     the new batch failed with NUM_COLUMNS_MISMATCH."""
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=64, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=64)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
-    manifest = json.load(open(f"{root}/nodes.manifest.json"))
+    manifest = json.load(open(f"{root}/nodes._manifests/v0.json"))
     seen = set(manifest["buckets"])
     # find a key whose bucket is NOT in the manifest yet (64 buckets, one
     # occupied -> trivially findable)
@@ -170,45 +139,55 @@ def test_manifest_upsert_into_unseen_bucket(spark, tmp_path):
     assert state[(fresh, "ORG")] == "s2"
 
 
-def test_reopen_manifest_store_with_default_mode_keeps_writing(spark, tmp_path):
-    """Regression (round-4 advice): a store CREATED in manifest mode but
-    REOPENED with the default commit_mode='rename' used to write through
-    the rename path while reads resolved via the stale manifest —
-    silently losing every post-reopen write. The table's on-disk layout
-    now dictates the protocol: a manifest table stays manifest."""
+class _IntrudingIO(PosixFileIO):
+    """Runs ``intrude`` once, right before this handle's next exclusive
+    create: the window in which a concurrent writer commits the version
+    this handle is about to claim."""
+
+    intrude = None
+
+    def write_text_exclusive(self, path, text):
+        intrude, self.intrude = self.intrude, None
+        if intrude is not None:
+            intrude()
+        super().write_text_exclusive(path, text)
+
+
+@pytest.mark.parametrize(
+    "intruder, expected",
+    [
+        ("upsert", {("Apple", "ORG"): "s0", ("Jobs", "PERSON"): "s1", ("MSFT", "ORG"): "s2"}),
+        ("clear_session", {("Jobs", "PERSON"): "s1"}),
+    ],
+    ids=["upsert", "clear_session"],
+)
+def test_concurrent_writers_one_winner_per_version(spark, tmp_path, intruder, expected):
+    """Handles A and B on one root both read v0; B commits v1 while A is
+    merging. A's claim of v1 must fail loudly instead of replacing B's
+    commit, and A's retry must land on top of B's as v2."""
     root = str(tmp_path / "g")
-    first = GraphStore(spark, root, n_buckets=8, commit_mode="manifest")
-    first.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
+    a_io = _IntrudingIO()
+    a = GraphStore(spark, root, n_buckets=4, io=a_io)
+    b = GraphStore(spark, root, n_buckets=4)
+    a.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s0"), ("Jobs", "PERSON", "s1")]))
 
-    reopened = GraphStore(spark, root, n_buckets=8)  # default: rename
-    reopened.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s2"), ("MSFT", "ORG", "s2")]))
-    assert _state(reopened) == {("Apple", "ORG"): "s2", ("MSFT", "ORG"): "s2"}
-    # and clear_session through the reopened handle also lands
-    reopened.clear_session("s2")
-    assert reopened.nodes().count() == 0
+    if intruder == "upsert":
+        a_io.intrude = lambda: b.upsert_nodes(_nodes_df(spark, [("MSFT", "ORG", "s2")]))
+    else:
+        a_io.intrude = lambda: b.clear_session("s0")
+    batch_a = _nodes_df(spark, [("Apple", "ORG", "s3")])
+    with pytest.raises(FileExistsError, match="'nodes'.*v1"):
+        a.upsert_nodes(batch_a)
+    assert _state(a) == _state(b) == expected  # B's commit survived
 
-
-def test_manifest_migrates_legacy_layout(spark, tmp_path):
-    """Opening a rename-era store with commit_mode='manifest' migrates on
-    first upsert; subsequent reads resolve via the manifest."""
-    root = str(tmp_path / "g")
-    legacy = GraphStore(spark, root, n_buckets=4)
-    legacy.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
-
-    store = GraphStore(spark, root, n_buckets=4, commit_mode="manifest")
-    store.upsert_nodes(_nodes_df(spark, [("MSFT", "ORG", "s1")]))
-    assert _state(store) == {("Apple", "ORG"): "s1", ("MSFT", "ORG"): "s1"}
-    manifest = json.load(open(f"{root}/nodes.manifest.json"))
-    assert manifest["buckets"]  # manifest now owns the table
-
-
-def test_rename_mode_refuses_object_store_roots(spark):
-    """Rename-mode commits need atomic directory rename; object stores
-    emulate it as copy+delete (torn commits on crash). The constructor
-    must refuse rather than run unsafely; manifest mode is the documented
-    object-store path (the guard fires before any I/O, so no real bucket
-    is needed)."""
-    import pytest
-
-    with pytest.raises(ValueError, match="atomic directory rename"):
-        GraphStore(spark, "s3a://bucket/graph", commit_mode="rename")
+    a.upsert_nodes(batch_a)  # retry re-merges against v1
+    assert _state(b) == {**expected, ("Apple", "ORG"): "s3"}
+    assert sorted(os.listdir(os.path.join(root, "nodes._manifests"))) == [
+        "v0.json",
+        "v1.json",
+        "v2.json",
+    ]
+    # vacuum drops the superseded versions; the state is unchanged
+    a.vacuum("nodes")
+    assert os.listdir(os.path.join(root, "nodes._manifests")) == ["v2.json"]
+    assert _state(b) == {**expected, ("Apple", "ORG"): "s3"}

@@ -1,9 +1,8 @@
 """Unit tests for operators not covered by the golden pipeline, on
-hand-computed inputs: KG graph store upserts and time travel, the
-visualization color map, capability gates and the snapshot diff; and the
-corpus-curation operators in ``corpus_ops`` (dedup, similarity, BPE,
-CDC chunking and packing, text statistics, sketches, sampling, graph
-analytics)."""
+hand-computed inputs: KG graph store upserts, the visualization color
+map, capability gates and the snapshot diff; and the corpus-curation
+operators in ``corpus_ops`` (dedup, similarity, BPE, CDC chunking and
+packing, text statistics, sampling)."""
 
 from __future__ import annotations
 
@@ -477,39 +476,6 @@ def test_bpe_empty_corpus(spark):
     assert bpe_train(docs, 4, method="collect").count() == 0
 
 
-def test_cms_one_sided_error(spark):
-    """est >= true count for EVERY word, even with a tiny width that
-    forces collisions; with ample width the estimate is exact."""
-    from corpus_ops.sketch import cms_build, cms_estimate
-
-    text = " ".join(["alpha"] * 7 + ["beta"] * 5 + ["gamma"] * 3 + ["delta", "omega"])
-    docs = spark.createDataFrame([(0, text)], ["doc_id", "text"])
-    truth = {"alpha": 7, "beta": 5, "gamma": 3, "delta": 1, "omega": 1}
-    words = spark.createDataFrame([(w,) for w in truth], ["word"])
-
-    tight = cms_build(docs, depth=4, width=4)
-    est_tight = {r.word: r.est for r in cms_estimate(tight, words, depth=4, width=4).collect()}
-    assert all(est_tight[w] >= n for w, n in truth.items()), est_tight
-
-    wide = cms_build(docs, depth=4, width=4096)
-    est_wide = {r.word: r.est for r in cms_estimate(wide, words, depth=4, width=4096).collect()}
-    assert est_wide == truth
-
-    # the sketch never exceeds depth*width rows, whatever the corpus
-    assert tight.count() <= 16 and wide.count() <= 5 * 4
-
-
-def test_cms_unseen_word_estimates_low(spark):
-    from corpus_ops.sketch import cms_build, cms_estimate
-
-    docs = spark.createDataFrame([(0, "alpha alpha beta")], ["doc_id", "text"])
-    words = spark.createDataFrame([("zzzz",)], ["word"])
-    sketch = cms_build(docs, depth=4, width=4096)
-    est = cms_estimate(sketch, words, depth=4, width=4096).collect()[0]
-    # an unseen word can only collide; at this width it reads 0
-    assert est.est == 0
-
-
 def test_graph_store_clear_preserves_null_session(spark, tmp_path):
     from knowledge_graph_builder_spark.sources.graph_store import GraphStore
 
@@ -541,100 +507,13 @@ def test_graph_store_upsert_deterministic_within_batch(spark, tmp_path):
     assert len(winners) == 1
 
 
-def test_degree_stats_hand_graph(spark):
-    from corpus_ops.graphalg import degree_stats
-
-    e = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("d", "a")], "src string, dst string"
-    )
-    out = {r.node: (r.out_degree, r.in_degree, r.degree) for r in degree_stats(e).collect()}
-    assert out == {"a": (2, 1, 3), "b": (1, 1, 2), "c": (0, 2, 2), "d": (1, 0, 1)}
-
-
-def test_pagerank_star_and_normalization(spark):
-    from corpus_ops.graphalg import pagerank
-
-    # star: everyone points at 'hub'; hub is dangling
-    e = spark.createDataFrame(
-        [("s1", "hub"), ("s2", "hub"), ("s3", "hub")], "src string, dst string"
-    )
-    ranks = {r.node: r.rank for r in pagerank(e, iterations=20).collect()}
-    assert ranks["hub"] == max(ranks.values())
-    assert ranks["s1"] == ranks["s2"] == ranks["s3"] < ranks["hub"]
-    # dangling redistribution keeps the distribution normalized
-    assert abs(sum(ranks.values()) - 1.0) < 1e-6
-
-
-def test_triangle_count_hand_graphs(spark):
-    from corpus_ops.graphalg import triangle_count
-
-    # K4 on {a,b,c,d}: 4 triangles, every node in 3; pendant 'e' in none;
-    # reversed duplicate edge + self-loop must not change counts
-    k4 = [(x, y) for i, x in enumerate("abcd") for y in "abcd"[i + 1 :]]
-    e = spark.createDataFrame(
-        k4 + [("d", "e"), ("b", "a"), ("c", "c")], "src string, dst string"
-    )
-    out = {r.node: r.n_triangles for r in triangle_count(e).collect()}
-    assert out == {"a": 3, "b": 3, "c": 3, "d": 3}
-
-    # single triangle plus a disconnected edge
-    e2 = spark.createDataFrame(
-        [("x", "y"), ("y", "z"), ("z", "x"), ("p", "q")], "src string, dst string"
-    )
-    out2 = {r.node: r.n_triangles for r in triangle_count(e2).collect()}
-    assert out2 == {"x": 1, "y": 1, "z": 1}
-
-
-def test_neighbor_jaccard_hand_graph(spark):
-    from corpus_ops.graphalg import neighbor_jaccard
-
-    # square a-b-c-d-a plus diagonal a-c:
-    #   pair (a,c): common {b,d}, deg a=3, c=3 -> 2/(3+3-2)=0.5
-    #   pair (a,b): common {c},    deg a=3, b=2 -> 1/(3+2-1)=0.25
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c")],
-        "src string, dst string",
-    )
-    out = {(r.a, r.b): (r.common, r.jaccard) for r in neighbor_jaccard(e).collect()}
-    assert out == {
-        ("a", "c"): (2, 0.5),
-        ("a", "b"): (1, 0.25),
-        ("b", "c"): (1, 0.25),
-        ("a", "d"): (1, 0.25),
-        ("c", "d"): (1, 0.25),
-    }
-    # hub-center cap: dropping the degree-3 centers (a, c) removes the
-    # wedges they host — every pair whose only common neighbor is a or c
-    # disappears; (a, c) survives intact because its common neighbors
-    # b and d are both under the cap
-    capped = {
-        (r.a, r.b): (r.common, r.jaccard)
-        for r in neighbor_jaccard(e, max_center_degree=2).collect()
-    }
-    assert capped == {("a", "c"): (2, 0.5)}
-
-
-def test_k_core_peels_to_fixpoint(spark):
-    from corpus_ops.graphalg import k_core
-
-    # triangle {a,b,c} with two pendant chains: 2-core is exactly the
-    # triangle; the chain must peel over MULTIPLE rounds (e->d first,
-    # then d->c), exercising the fixpoint loop
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"), ("b", "f")],
-        "src string, dst string",
-    )
-    out = {r.node: r.core_degree for r in k_core(e, k=2).collect()}
-    assert out == {"a": 2, "b": 2, "c": 2}
-    # k above the max degree peels everything
-    assert k_core(e, k=4).collect() == []
-
-
 def test_graph_store_bucketed_upsert_leaves_untouched_buckets_byte_identical(spark, tmp_path):
     """Scale contract: an upsert rewrites ONLY the hash buckets its batch
-    touches — cost scales with batch size, not store size."""
+    touches — cost scales with batch size, not store size. Compares the
+    files each bucket of the latest manifest points at."""
     import glob
     import hashlib
+    import json
     import os
 
     root = str(tmp_path / "g")
@@ -646,13 +525,17 @@ def test_graph_store_bucketed_upsert_leaves_untouched_buckets_byte_identical(spa
 
     def bucket_state():
         out = {}
-        for bdir in glob.glob(f"{root}/nodes/_bucket=*"):
+        mdir = f"{root}/nodes._manifests"
+        latest = max(int(f[1:-5]) for f in os.listdir(mdir) if f.endswith(".json"))
+        with open(f"{mdir}/v{latest}.json") as fh:
+            manifest = json.load(fh)
+        for b, cdir in manifest["buckets"].items():
             h = hashlib.md5()
-            for f in sorted(glob.glob(bdir + "/*")):
+            for f in sorted(glob.glob(f"{root}/nodes._commits/{cdir}/_bucket={b}/*")):
                 with open(f, "rb") as fh:
                     h.update(os.path.basename(f).encode())
                     h.update(fh.read())
-            out[os.path.basename(bdir)] = h.hexdigest()
+            out[b] = h.hexdigest()
         return out
 
     before = bucket_state()
@@ -667,24 +550,6 @@ def test_graph_store_bucketed_upsert_leaves_untouched_buckets_byte_identical(spa
     assert out.count() == 64  # MERGE, not append
     assert out.filter("name = 'n3'").collect()[0]["session_id"] == "s2"  # last writer
     assert out.filter("name = 'n5'").collect()[0]["session_id"] == "s1"  # untouched
-
-
-def test_graph_store_legacy_table_migrates_to_buckets(spark, tmp_path):
-    """A round-1 (unbucketed) store upgrades in place on first upsert."""
-    root = str(tmp_path / "g")
-    legacy = spark.createDataFrame(
-        [("Apple", "ORG", "s1", 0)], "name string, type string, session_id string, _batch_seq int"
-    )
-    legacy.write.parquet(f"{root}/nodes")
-    store = GraphStore(spark, root, n_buckets=8)
-    store.upsert_nodes(
-        spark.createDataFrame([("MSFT", "ORG", "s1")], "name string, type string, session_id string")
-    )
-    rows = {r.name: r.session_id for r in store.nodes().collect()}
-    assert rows == {"Apple": "s1", "MSFT": "s1"}
-    import glob
-
-    assert glob.glob(f"{root}/nodes/_bucket=*")  # now bucketed
 
 
 def test_viz_color_map_matches_reference(spark):
@@ -911,34 +776,6 @@ def test_mixture_weights_alpha_math(spark):
         assert r["weight"] == r["share"] and r["boost"] == 1.0
 
 
-def test_label_propagation_two_communities(spark):
-    from corpus_ops.graphalg import label_propagation
-
-    # two triangles joined by a single bridge edge: LPA must keep them
-    # as two communities (the bridge is outvoted on both sides)
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("a", "c"),
-         ("x", "y"), ("y", "z"), ("x", "z"),
-         ("c", "x")],
-        ["src", "dst"],
-    )
-    comm = {r["node"]: r["community"]
-            for r in label_propagation(edges, iterations=5).collect()}
-    assert comm["a"] == comm["b"] == comm["c"]
-    assert comm["x"] == comm["y"] == comm["z"]
-    assert comm["a"] != comm["x"]
-    # a lone bipartite pair must not oscillate: both ends settle on the
-    # min label thanks to the self-vote damping
-    pair = spark.createDataFrame([("p", "q")], ["src", "dst"])
-    got = {r["node"]: r["community"]
-           for r in label_propagation(pair, iterations=4).collect()}
-    assert got == {"p": "p", "q": "p"}
-    # deterministic under repartitioning
-    comm2 = {r["node"]: r["community"]
-             for r in label_propagation(edges.repartition(7), iterations=5).collect()}
-    assert comm2 == comm
-
-
 def test_shard_assign_deterministic_and_manifest(spark):
     from corpus_ops.packing import shard_assign, shard_manifest
 
@@ -991,28 +828,6 @@ def test_ngram_vocab_stats_approx_within_tolerance(spark):
         # HLL++ distinct within 5% (default rsd is ~2.3%)
         e, a = exact[n]["distinct_grams"], apx[n]["distinct_grams"]
         assert abs(a - e) <= max(0.05 * e, 2), (n, e, a)
-
-
-def test_bfs_levels_hand_graph(spark):
-    from corpus_ops.graphalg import bfs_levels
-
-    # path 1-2-3-4-5 plus an unreachable island {10, 11}; the 2->1 back
-    # edge must not re-visit node 1 (anti-join against visited)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (2, 1)], "src int, dst int"
-    )
-    got = {(r.node, r.hops) for r in bfs_levels(e, [1]).collect()}
-    assert got == {(1, 0), (2, 1), (3, 2), (4, 3), (5, 4)}
-
-    # undirected traversal reaches backwards; max_hops truncates levels
-    back = {(r.node, r.hops) for r in bfs_levels(e, [5], directed=False).collect()}
-    assert back == {(5, 0), (4, 1), (3, 2), (2, 3), (1, 4)}
-    capped = {(r.node, r.hops) for r in bfs_levels(e, [1], max_hops=2).collect()}
-    assert capped == {(1, 0), (2, 1), (3, 2)}
-
-    # multi-seed: distance is the minimum over seeds; duplicate seeds fold
-    multi = {(r.node, r.hops) for r in bfs_levels(e, [1, 4, 4]).collect()}
-    assert multi == {(1, 0), (4, 0), (2, 1), (5, 1), (3, 2)}
 
 
 def test_quantize_embeddings_hand_vectors(spark):
@@ -1158,43 +973,6 @@ def test_snapshot_diff_labels(spark):
     # 1 unchanged (dropped); 2 changed (s); 3 changed (NULL->30, null-safe);
     # 4 removed; 5 added
     assert got == {(2, "changed"), (3, "changed"), (4, "removed"), (5, "added")}
-
-
-def test_graph_store_time_travel(spark, tmp_path):
-    import pytest as _pytest
-
-    from knowledge_graph_builder_spark.sources.graph_store import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "hist"), n_buckets=4, keep_history=True)
-    n1 = spark.createDataFrame(
-        [("Apple", "ORG", "s1"), ("Jobs", "PERSON", "s1")], "name string, type string, session_id string"
-    )
-    store.upsert_nodes(n1)
-    seq1 = store.current_seq("nodes")
-    n2 = spark.createDataFrame(
-        [("Apple", "ORG", "s2"), ("iPhone", "PRODUCT", "s2")], "name string, type string, session_id string"
-    )
-    store.upsert_nodes(n2)
-
-    # current state: last writer per key, 3 distinct keys
-    cur = {(r.name, r.session_id) for r in store.nodes().collect()}
-    assert cur == {("Apple", "s2"), ("Jobs", "s1"), ("iPhone", "s2")}
-    # as-of the first batch: Apple still s1, no iPhone yet
-    past = {(r.name, r.session_id) for r in store.nodes_as_of(seq1).collect()}
-    assert past == {("Apple", "s1"), ("Jobs", "s1")}
-    # before any batch: empty
-    assert store.nodes_as_of(seq1 - 1).count() == 0
-
-    # a last-writer-only store refuses time travel instead of lying
-    flat = GraphStore(spark, str(tmp_path / "flat"), n_buckets=4)
-    flat.upsert_nodes(n1)
-    with _pytest.raises(ValueError):
-        flat.nodes_as_of(0)
-    # and its current read is unaffected (write-time dedup path)
-    assert {(r.name, r.session_id) for r in flat.nodes().collect()} == {
-        ("Apple", "s1"),
-        ("Jobs", "s1"),
-    }
 
 
 def test_cross_doc_duplicated_spans(spark):
